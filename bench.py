@@ -33,32 +33,36 @@ def _ingest_bench(spark, n: int) -> float:
     weekly): land one file, run the full pipeline (parse → validate → merge
     → ledger), timed end-to-end. File generation is excluded."""
     import json as _json
+    import shutil
     import tempfile
 
     from data_pipeline_challenge_spark.pipeline import ProductWarehouse
     from data_pipeline_challenge_spark.sources.landing import upload
 
     root = Path(tempfile.mkdtemp(prefix="bench_ingest_"))
-    landing = root / "landing"
-    recs = [
-        {
-            "code": f"{i:013d}",
-            "product_name": f"Product {i}",
-            "brands": f"Brand{i % 97}",
-            "nutriments": {"fat_100g": (i % 500) / 10.0, "salt_100g": i % 3},
-            "categories_tags": [f"en:cat{i % 23}"],
-            "serving_quantity": i % 40,
-        }
-        for i in range(n)
-    ]
-    src = root / "products_50k.json"
-    src.write_text(_json.dumps(recs))
-    upload(src, landing)
-    wh = ProductWarehouse(spark, root / "wh")
-    t0 = time.perf_counter()
-    report = wh.ingest(landing)
-    elapsed = time.perf_counter() - t0
-    assert report.total_processed == n, report.files
+    try:
+        landing = root / "landing"
+        recs = [
+            {
+                "code": f"{i:013d}",
+                "product_name": f"Product {i}",
+                "brands": f"Brand{i % 97}",
+                "nutriments": {"fat_100g": (i % 500) / 10.0, "salt_100g": i % 3},
+                "categories_tags": [f"en:cat{i % 23}"],
+                "serving_quantity": i % 40,
+            }
+            for i in range(n)
+        ]
+        src = root / "products_50k.json"
+        src.write_text(_json.dumps(recs))
+        upload(src, landing)
+        wh = ProductWarehouse(spark, root / "wh")
+        t0 = time.perf_counter()
+        report = wh.ingest(landing)
+        elapsed = time.perf_counter() - t0
+        assert report.total_processed == n, report.files
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     # Surface the single-core array→JSONL edge-conversion prefix inside
     # the ingest wall (a 50k array delivery is above the split threshold,
     # so it pays the conversion; a JSONL delivery would not).

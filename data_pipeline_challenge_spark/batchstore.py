@@ -240,8 +240,12 @@ def prefix_bucket_local(spark, values: "list[str]", n_buckets: int) -> "list[int
     probe profile: ~0.34s of a 1.25s warm probe). Values must be the
     same TYPE the store's bucket column hashes (xxhash64 of a bigint is
     a different value than of its string); every current store buckets
-    strings. Equality with the distributed expression is pinned by
-    ``test_prefix_bucket_local_matches_distributed``."""
+    strings, so any other value type raises ``TypeError`` instead of
+    silently returning a wrong bucket. Equality with the distributed
+    expression is pinned by ``test_prefix_bucket_local_matches_distributed``."""
+    bad = [v for v in values if not isinstance(v, str)]
+    if bad:
+        raise TypeError(f"prefix_bucket_local hashes str values only, got {bad[:3]!r}")
     out: list[int] = []
     for start in range(0, len(values), 100):  # bound statement width
         chunk = values[start : start + 100]

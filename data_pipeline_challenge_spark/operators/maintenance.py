@@ -11,15 +11,15 @@ pipeline._overwrite_products).
 Two forms:
 
 - :func:`compact_published_table` — ONLINE, for the engine's
-  version-published tables (products / ledger state / streaming sinks:
-  ``<prefix>.v{N}`` dirs behind an atomically-replaced symlink). The
+  version-published stream-sink tables (``<prefix>.v{N}`` dirs behind an
+  atomically-replaced symlink; the products table compacts through
+  ``ProductWarehouse.compact_products`` instead). The
   compacted copy becomes version N+1 published through the same symlink
   swap with two-version retention, so a reader planned against the old
   version keeps scanning it safely — the lakehouse
   OPTIMIZE-under-commit-protocol shape. Readers need no coordination;
-  concurrent WRITERS do (hold the table's writer lock — see
-  ``ProductWarehouse.compact_products`` — or compact a stream sink while
-  its stream is not running).
+  concurrent WRITERS do (compact a stream sink while its stream is not
+  running).
 - :func:`compact_parquet_dir` — OFFLINE, for plain (unversioned) parquet
   dirs: write-new + atomic rename. A crash can never leave a half-written
   table, but the rename swaps the live directory, so run it only without

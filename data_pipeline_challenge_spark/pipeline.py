@@ -15,10 +15,12 @@ is a no-op (idempotent merge + ledger anti-join) — the exactly-once
 upgrade of at-least-once queue redelivery.
 
 Storage: plain parquet behind a versioned atomic-symlink publish (the
-local stand-in for a transactional table format). Writes are
-MERGE-ON-READ once a base version is published: each ingest batch lands
-as a small ``products.v{N}.d{k}`` delta dir (one batch-merged row per
-code) instead of rewriting the table, ``products()`` composes
+local stand-in for a transactional table format). The publish protocol —
+next version, write, symlink swap, retention, no-symlink fallback — lives
+in ``versioning.VersionedTable`` only; this module just calls it. Writes
+are MERGE-ON-READ once a base version is published: each ingest batch
+lands as a small ``products.v{N}.d{k}`` delta dir (one batch-merged row
+per code) instead of rewriting the table, ``products()`` composes
 base ∪ deltas without shuffling the base, and every
 ``delta_fold_threshold`` deltas the composed view is materialized as the
 next base version — the amortized rewrite. On a production lake this
@@ -55,7 +57,7 @@ from .sources.json_ingest import (
 )
 from .sources.landing import discover_new_files, gc_file
 from .sources.ledger import LedgerStore
-from .versioning import retire_versions, swap_symlink
+from .versioning import VersionedTable
 
 
 @dataclass
@@ -80,17 +82,18 @@ class ProductWarehouse:
         self.spark = spark
         self.dir = Path(warehouse_dir)
         self.products_path = self.dir / "products"
+        self.products_table = VersionedTable(self.products_path)
         self.ledger = LedgerStore(spark, self.dir)
         # Splittable-parse knobs (tests shrink them to exercise chunking).
         self.split_threshold_bytes = SPLIT_THRESHOLD_BYTES
         self.chunk_records = CHUNK_RECORDS
         self.jsonl_partition_bytes = JSONL_PARTITION_BYTES
         self._products_lock_path = self.dir / "products.lock"
-        #: Merge-on-read fold cadence: once a published base version has
-        #: this many delta dirs, the next ingest folds them into a new
-        #: base (the amortized full rewrite). 0/None disables deltas —
-        #: every merge rewrites the full table (the pre-delta behavior).
-        self.delta_fold_threshold: int | None = 8
+        #: Merge-on-read fold cadence (a positive int): once a published
+        #: base version has this many delta dirs, the ingest that wrote
+        #: the last one folds them into a new base (the amortized full
+        #: rewrite); 1 folds on every ingest.
+        self.delta_fold_threshold: int = 8
         #: How long a reaped orphan stays resurrection-eligible before
         #: the janitor retires it from the checked set (see
         #: reap_orphaned_uploads).
@@ -112,39 +115,6 @@ class ProductWarehouse:
 
     # -- products table ------------------------------------------------------
 
-    def _product_versions(self) -> list[Path]:
-        """Versioned table dirs ``products.v{N}``, sorted by N."""
-        import re
-
-        pat = re.compile(r"^products\.v(\d+)$")
-        if not self.dir.exists():
-            return []
-        found = [
-            (int(m.group(1)), p)
-            for p in self.dir.iterdir()
-            if (m := pat.match(p.name))
-        ]
-        return [p for _, p in sorted(found)]
-
-    def _resolve_products_dir(self) -> Path | None:
-        """The directory ``products()`` reads — resolved ONCE so the scan
-        is pinned: the symlink target, a legacy real directory
-        (pre-versioning warehouse), or the newest COMPLETE version dir
-        (crash between write and publish). Completeness = ``_SUCCESS``: a
-        half-written crash remnant is indistinguishable from a
-        written-but-unpublished version by name alone, and trusting it
-        would propagate a torn table into the next merge — better absent
-        (the ledger/event log makes re-ingest self-healing)."""
-        p = self.products_path
-        if p.is_symlink():
-            target = p.parent / os.readlink(p)
-            if target.exists():
-                return target
-        elif p.exists() and any(p.iterdir()):
-            return p
-        versions = self._complete_product_versions()
-        return versions[-1] if versions else None
-
     def _delta_dirs(self, base: Path) -> list[Path]:
         """COMMITTED merge-on-read delta dirs of a versioned base, in
         fold order (``products.v{N}.d{k}``, ascending k). Commitment is
@@ -160,7 +130,7 @@ class ProductWarehouse:
         never deleted here."""
         import re
 
-        if not re.match(r"^products\.v\d+$", base.name):
+        if base == self.products_path:
             return []  # legacy real dir: the delta protocol never ran
         pat = re.compile(re.escape(base.name) + r"\.d(\d+)$")
         found = [
@@ -181,7 +151,7 @@ class ProductWarehouse:
         merge-on-read deltas present, the returned plan composes
         base ∪ deltas without ever shuffling the base (see
         ``_compose_with_deltas``)."""
-        target = self._resolve_products_dir()
+        target = self.products_table.current()
         if target is None:
             return self.spark.createDataFrame([], PRODUCT_SCHEMA)
         base = self.spark.read.schema(PRODUCT_SCHEMA).parquet(str(target))
@@ -220,47 +190,34 @@ class ProductWarehouse:
         folded = merge_products(hit, stacked, seq_col="__dgen")
         return miss.unionByName(folded)
 
-    def _complete_product_versions(self) -> list[Path]:
-        """Version dirs safe to fall back on: only those whose write
-        finished (``_SUCCESS`` present)."""
-        return [v for v in self._product_versions() if (v / "_SUCCESS").exists()]
-
-    def _has_products(self) -> bool:
-        p = self.products_path
-        if p.is_symlink():
-            return True
-        if p.exists() and any(p.iterdir()):
-            return True
-        return bool(self._complete_product_versions())
+    def _table_files(self, base: Path | None) -> list[Path]:
+        """Parquet files of the base version ``base`` + its live deltas."""
+        if base is None:
+            return []
+        return [
+            f
+            for d in (base, *self._delta_dirs(base))
+            for f in d.rglob("*.parquet")
+            if f.is_file()
+        ]
 
     def _table_bytes(self) -> int:
-        """Parquet bytes of the published products table + live deltas
-        (driver-side stat, no Spark job) — the size estimator for output
-        file sizing."""
-        roots: list[Path] = []
-        if self.products_path.is_symlink():
-            base = self._resolve_products_dir()
-            if base is not None:
-                roots = [base, *self._delta_dirs(base)]
-        elif self.products_path.exists():
-            roots = [self.products_path]
-        return sum(
-            f.stat().st_size
-            for root in roots
-            for f in Path(root).rglob("*.parquet")
-            if f.is_file()
-        )
+        """Parquet bytes of the products table readers see (the version
+        ``products()`` resolves + its live deltas; driver-side stat, no
+        Spark job) — the size estimator for output file sizing."""
+        files = self._table_files(self.products_table.current())
+        return sum(f.stat().st_size for f in files)
 
     def _overwrite_products(
         self,
         df: DataFrame,
         n_files: int | None = None,
         extra_bytes: int = 0,
-    ) -> None:
-        """Write a new version dir + atomic symlink publish (readers never
-        see a half-written table, and a reader mid-scan on the previous
-        version survives: only versions two publishes old are deleted —
-        the discipline sources/ledger.py and the streaming sinks use).
+    ) -> Path:
+        """Write ``df`` as the next products version through the table's
+        versioned publish (``versioning.VersionedTable.publish``: readers
+        never see a half-written table, and a reader mid-scan on the
+        previous version survives one publish).
 
         Layout: range-partitioned + sorted by code, so every parquet file
         owns a disjoint code range — point lookups (op 15) prune to one
@@ -278,89 +235,45 @@ class ProductWarehouse:
         skips the range sampler (and the cache that existed only to keep
         the sampler from computing the merge twice): one action, one
         sorted file — the same disjoint-range layout."""
-        versions = self._product_versions()
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = self.dir / f"products.v{next_n}"
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
         nparts = n_files or max(
             1, -(-(self._table_bytes() + extra_bytes) // (128 << 20))
         )
-        if nparts == 1:
-            (
-                df.coalesce(1)
-                .sortWithinPartitions("code")
-                .write.mode("overwrite")
-                .parquet(str(new_dir))
-            )
-        else:
+
+        def write(new_dir: Path) -> None:
+            if nparts == 1:
+                (
+                    df.coalesce(1)
+                    .sortWithinPartitions("code")
+                    .write.mode("overwrite")
+                    .parquet(str(new_dir))
+                )
+                return
             # repartitionByRange runs a separate range-sampling job first;
             # cache the merge result so sampling + write don't compute it
             # twice.
-            df = df.cache()
+            cached = df.cache()
             try:
                 (
-                    df.repartitionByRange(nparts, "code")
+                    cached.repartitionByRange(nparts, "code")
                     .sortWithinPartitions("code")
                     .write.mode("overwrite")
                     .parquet(str(new_dir))
                 )
             finally:
-                df.unpersist()
+                cached.unpersist()
 
-        state = self.products_path
-        # What readers could be pinned to before this publish: the
-        # symlink target, or — symlink-less crash window — the newest
-        # complete version the products() fallback ranks first.
-        prev_read = None
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            if target.exists():
-                prev_read = target
-        else:
-            complete_before = [
-                v for v in self._complete_product_versions() if v != new_dir
-            ]
-            if complete_before:
-                prev_read = complete_before[-1]
-        if state.exists() and not state.is_symlink():
-            # Pre-versioning warehouse: retire the real directory. The
-            # brief gap before the publish below is covered by the
-            # newest-version fallback in products().
-            legacy = self.dir / "products.legacy"
-            if legacy.exists():
-                shutil.rmtree(legacy)
-            state.rename(legacy)
-        swap_symlink(state, new_dir.name)  # readers see old xor new
-
-        # Retain exactly {new, previously-read}: a crash remnant —
-        # torn OR complete-but-unpublished — must not displace the
-        # just-retired live version from retention while a pinned reader
-        # is still scanning it (see versioning.retire_versions). Writers
-        # hold the products flock, so nothing else is in-flight.
-        retire_versions(self._product_versions(), keep=(new_dir, prev_read))
+        new_dir = self.products_table.publish(write)
         self._sweep_orphan_deltas()
-        legacy = self.dir / "products.legacy"
-        if legacy.exists():
-            shutil.rmtree(legacy, ignore_errors=True)
+        return new_dir
 
     def _sweep_orphan_deltas(self) -> None:
         """Merge-on-read delta dirs (and their crashed tmps) live and die
         with their base version: a retained base keeps its deltas (a
         pinned reader's composed plan spans both); once the base is
-        retired its deltas are unreachable. Run after every retention
-        pass — including the no-deltas compaction branch, whose
-        ``compact_published_table`` retires bases without knowing the
-        delta protocol exists."""
-        import re
-
-        live = {v.name for v in self._product_versions()}
-        dpat = re.compile(r"^(products\.v\d+)\.d\d+(\.tmp)?$")
-        for q in list(self.dir.iterdir()):
-            m = dpat.match(q.name)
-            if m and m.group(1) not in live:
+        retired its deltas are unreachable. Run after every publish."""
+        live = {v.name for v in self.products_table.versions()}
+        for q in list(self.dir.glob("products.v*.d*")):
+            if q.name.rpartition(".d")[0] not in live:
                 shutil.rmtree(q, ignore_errors=True)
 
     def _append_delta(self, delta: DataFrame, base: Path) -> Path:
@@ -392,53 +305,34 @@ class ProductWarehouse:
 
     def compact_products(self, target_file_bytes: int = 128 << 20):
         """Online small-file compaction of the products table: the
-        compacted copy becomes the next ``products.v{N}`` published
-        through the same atomic symlink swap as a merge, so concurrent
-        readers (pinned to their resolved version, two-version retention)
-        are safe; concurrent WRITERS are excluded by the products flock —
-        a merge waits for the compaction, then reads the compacted table.
-        Keeps the range-partitioned/sorted-by-code layout the point-lookup
-        path prunes against. No-op before the first published version."""
-        from .operators.maintenance import CompactionReport, compact_published_table
+        composed view (base ∪ merge-on-read deltas) is rewritten into
+        ~``target_file_bytes`` files as the next ``products.v{N}``,
+        published through the same versioned publish as a merge, so
+        concurrent readers (pinned to their resolved version) are safe;
+        concurrent WRITERS are excluded by the products flock — a merge
+        waits for the compaction, then reads the compacted table. Folding
+        and compacting are ONE publish: two in a row would evict the
+        version a reader pinned just before the call (a pinned version
+        survives ONE publish). Keeps the range-partitioned/sorted-by-code
+        layout the point-lookup path prunes against. No-op before the
+        first published version."""
+        from .operators.maintenance import CompactionReport
 
         with self._products_lock():
-            if not self.products_path.is_symlink():
-                return None
-            base_dir = self._resolve_products_dir()
-            deltas = self._delta_dirs(base_dir) if base_dir is not None else []
-            if deltas:
-                # Live merge-on-read deltas: fold AND compact in ONE
-                # publish — compact_published_table reads only the
-                # symlink target (it would silently drop delta rows),
-                # and folding first then compacting would publish twice
-                # in a row, evicting the version a reader pinned just
-                # before the call (the contract is: a pinned version
-                # survives ONE publish). The composed view materializes
-                # through the normal versioned publish with compaction's
-                # file sizing.
-                parts = [
-                    f
-                    for d in (base_dir, *deltas)
-                    for f in Path(d).rglob("*.parquet")
-                    if f.is_file()
-                ]
-                total = sum(f.stat().st_size for f in parts)
-                n_out = max(1, -(-total // target_file_bytes))
-                self._overwrite_products(self.products(), n_files=n_out)
-                new_dir = self._resolve_products_dir()
-                after = [f for f in new_dir.rglob("*.parquet") if f.is_file()]
-                rows = self.spark.read.parquet(str(new_dir)).count()
-                return CompactionReport(len(parts), len(after), total, rows)
-            rep = compact_published_table(
-                self.spark,
-                self.products_path,
-                target_file_bytes=target_file_bytes,
-                sort_col="code",
+            base = (
+                self.products_table.current()
+                if self.products_path.is_symlink()
+                else None
             )
-            # compact_published_table retires bases without knowing the
-            # delta protocol; orphaned delta dirs must not leak.
-            self._sweep_orphan_deltas()
-            return rep
+            if base is None:
+                return None
+            parts = self._table_files(base)
+            total = sum(f.stat().st_size for f in parts)
+            n_out = max(1, -(-total // target_file_bytes))
+            new_dir = self._overwrite_products(self.products(), n_files=n_out)
+            after = [f for f in new_dir.rglob("*.parquet") if f.is_file()]
+            rows = self.spark.read.parquet(str(new_dir)).count()
+            return CompactionReport(len(parts), len(after), total, rows)
 
     def vacuum(
         self,
@@ -491,17 +385,9 @@ class ProductWarehouse:
         if landing_dir is not None:
             report["reaped"] = self.reap_orphaned_uploads(landing_dir)
         if self.products_path.is_symlink():
-            base = self._resolve_products_dir()
+            base = self.products_table.current()
             deltas = self._delta_dirs(base) if base is not None else []
-            n_files = len(
-                [
-                    f
-                    for d in (base, *deltas)
-                    if d is not None
-                    for f in Path(d).rglob("*.parquet")
-                    if f.is_file()
-                ]
-            )
+            n_files = len(self._table_files(base))
             if deltas or n_files > compact_min_files:
                 report["compaction"] = self.compact_products(target_file_bytes)
         return report
@@ -712,6 +598,9 @@ class ProductWarehouse:
         report = IngestReport()
         if not new_paths:
             return report
+        t = self.delta_fold_threshold
+        if not (isinstance(t, int) and t >= 1):
+            raise ValueError(f"delta_fold_threshold must be an int >= 1: {t!r}")
 
         # Large array files fan out into JSONL chunks (scratch is derived
         # data, wiped after the batch); conversion failures take the
@@ -812,12 +701,8 @@ class ProductWarehouse:
             # race to the same next version and one silently loses rows.
             if has_valid:
                 with self._products_lock():
-                    base_dir = (
-                        self._resolve_products_dir()
-                        if self.products_path.is_symlink()
-                        else None
-                    )
-                    if base_dir is not None and self.delta_fold_threshold:
+                    base = self.products_table.current()
+                    if base is not None and self.products_path.is_symlink():
                         # Merge-on-read: a published base exists, so this
                         # batch lands as a small delta dir instead of a
                         # full table rewrite — at 100 TB a 50k-record
@@ -827,9 +712,9 @@ class ProductWarehouse:
                         # the same content is a $set no-op in the
                         # composed view).
                         delta = merge_products(None, valid)
-                        self._append_delta(delta, base_dir)
+                        self._append_delta(delta, base)
                         if (
-                            len(self._delta_dirs(base_dir))
+                            len(self._delta_dirs(base))
                             >= self.delta_fold_threshold
                         ):
                             # Amortized rewrite: materialize the composed
@@ -838,9 +723,10 @@ class ProductWarehouse:
                             # publish).
                             self._overwrite_products(self.products())
                     else:
-                        existing = (
-                            self.products() if self._has_products() else None
-                        )
+                        # No published base: an empty warehouse, a legacy
+                        # real directory (migrated by this publish), or
+                        # the no-symlink crash window (republished here).
+                        existing = self.products() if base is not None else None
                         merged = merge_products(existing, valid)
                         # size the write by published bytes + this batch's
                         # landing bytes (raw JSON ≥ its parquet, so the

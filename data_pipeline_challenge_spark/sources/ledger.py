@@ -23,11 +23,14 @@ into the previous winners equals recomputing over the full log.
 Durability of the state table: data is written to a versioned directory
 (``ledger_state.v{N}``) and published by atomically replacing the
 ``ledger_state`` symlink (``os.replace`` of a sibling symlink — readers
-resolve either the old or the new version, never a partial table). If the
-state table is ever absent while the event log is not (a legacy warehouse,
-or a crash between writing a version and publishing the symlink), both
-``current()`` and the next compaction fold seed from the full event log —
-the state table is a cache of the log, so losing it is always recoverable.
+resolve either the old or the new version, never a partial table). The
+state and the compacted history are both published through
+``versioning.VersionedTable``, the one implementation of the publish
+protocol; this module carries no copy of it. If the state table is ever
+absent, or misses events the tail holds (a legacy warehouse, or a crash
+between a tail append and the state publish), both ``current()`` and the
+next compaction fold seed from the full event log — the state table is a
+cache of the log, so losing it is always recoverable.
 
 Concurrent writers: in-process appends serialize on a threading lock; a
 CROSS-process writer (a second ApiServer/ProductWarehouse on the same
@@ -50,16 +53,14 @@ warehouse is.
 from __future__ import annotations
 
 import datetime as dt
-import os
-import re
-import shutil
+import json
 import threading
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..versioning import retire_versions, swap_symlink
+from ..versioning import VersionedTable
 from ..schema import (
     LEDGER_SCHEMA,
     STATUS_FAILED,
@@ -84,6 +85,14 @@ class LedgerStore:
         self.path = str(Path(warehouse_dir) / "ledger")
         self.state_path = str(Path(warehouse_dir) / "ledger_state")
         self.hist_path = str(Path(warehouse_dir) / "ledger_hist")
+        self.state_table = VersionedTable(self.state_path)
+        #: The hist fallback (no symlink) only trusts a COMPLETE version:
+        #: a crash mid-checkpoint-write leaves a torn hist dir, and the
+        #: tail it would have folded is still intact (tail files are
+        #: deleted only after the publish), so ignoring it loses nothing.
+        #: A complete-but-unpublished hist double-counts its events with
+        #: the still-intact tail — harmless, the winner rule is idempotent.
+        self.hist_table = VersionedTable(self.hist_path)
         # In-process append serialization: the API's upload thread and the
         # background processor share one store, and the compaction's
         # read-merge-publish is not safe to interleave. Cross-process
@@ -97,33 +106,8 @@ class LedgerStore:
             return []
         return sorted(f for f in p.iterdir() if f.suffix == ".parquet")
 
-    def _hist_dir(self) -> Path | None:
-        """The published compacted-history version dir, if any. The
-        no-symlink fallback only trusts a COMPLETE version (``_SUCCESS``
-        present): a crash mid-checkpoint-write leaves a torn hist dir,
-        and the tail it would have folded is still intact (tail files are
-        deleted only after the publish), so ignoring the torn dir loses
-        nothing. A complete-but-unpublished hist double-counts its events
-        with the still-intact tail — harmless, the winner rule is
-        idempotent."""
-        p = Path(self.hist_path)
-        if p.is_symlink():
-            target = p.parent / os.readlink(p)
-            if target.exists():
-                return target
-        versions = [
-            v
-            for v in self._versions(self.hist_path)
-            if (v / "_SUCCESS").exists()
-        ]
-        return versions[-1] if versions else None
-
     def exists(self) -> bool:
-        return bool(self._tail_files()) or self._hist_dir() is not None
-
-    def _state_exists(self) -> bool:
-        p = Path(self.state_path)
-        return p.exists() and any(p.iterdir())
+        return bool(self._tail_files()) or self.hist_table.current() is not None
 
     def read_events(self) -> DataFrame:
         """The queryable event log: compacted history ∪ append tail.
@@ -138,7 +122,7 @@ class LedgerStore:
         (``test_ledger_compaction_equals_full_log_replay``).
         """
         parts = []
-        hist = self._hist_dir()
+        hist = self.hist_table.current()
         if hist is not None:
             parts.append(self.spark.read.schema(LEDGER_SCHEMA).parquet(str(hist)))
         if self._tail_files():
@@ -209,18 +193,18 @@ class LedgerStore:
                     ]
             if not full:
                 return []
-            # Detect (BEFORE this append's own tail file lands) events a
-            # crashed writer left in the tail but never folded into the
-            # state: the fold below must then seed from the full log or
-            # those events stay invisible and the next checkpoint
-            # destroys them (see _unfolded_tail_names).
-            seed_from_log = bool(self._unfolded_tail_names())
+            # Resolve the state to fold into BEFORE this append's own tail
+            # file lands. It is None when a crashed writer left tail events
+            # the state never folded: the fold below then seeds from the
+            # full log, or those events would stay invisible and the next
+            # checkpoint would destroy them (see _served_state).
+            state = self._served_state()
             df = self.spark.createDataFrame(
                 [tuple(r.get(f.name) for f in LEDGER_SCHEMA.fields) for r in full],
                 LEDGER_SCHEMA,
             )
             df.write.mode("append").parquet(self.path)
-            self._compact(df, seed_from_log=seed_from_log)
+            self._compact(df, state)
             self._checkpoint_events()
             return [r["file_id"] for r in full]
 
@@ -257,58 +241,35 @@ class LedgerStore:
             .drop("rn")
         )
 
-    def _versions(self, base: str | None = None) -> list[Path]:
-        base = base or self.state_path
-        pat = re.compile(re.escape(Path(base).name) + r"\.v(\d+)$")
-        parent = Path(base).parent
-        if not parent.exists():
-            return []
-        found = [
-            (int(m.group(1)), p)
-            for p in parent.iterdir()
-            if (m := pat.match(p.name))
-        ]
-        return [p for _, p in sorted(found)]
-
     _TAIL_MARKER = "_tail_files.json"
 
-    def _state_target(self) -> Path | None:
-        state = Path(self.state_path)
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            return target if target.exists() else None
-        return state if state.exists() else None
-
-    def _recorded_tail_names(self) -> set[str] | None:
-        """Tail parquet file names the published state reflects (from the
-        ``_tail_files.json`` marker written into the state version at
-        publish), or None when unknown (legacy/pre-marker state)."""
-        import json
-
-        target = self._state_target()
-        if target is None:
+    def _served_state(self) -> Path | None:
+        """The state version reads may serve: the resolved
+        ``ledger_state``, unless the live tail holds files its
+        ``_tail_files.json`` marker (written into the version before its
+        publish) does not list — a previous writer crashed between its
+        tail append and its state publish, the state predates the marker,
+        or it is an older retained version the no-symlink fallback found.
+        Then None, and callers replay hist ∪ tail. Without this check
+        those events would be invisible to every state-served read and
+        then destroyed by the next tail checkpoint, silently regressing a
+        processed file to 'uploaded' (and, once the janitor reaps it, to
+        a terminal 'failed' for data that IS in the products table)."""
+        state = self.state_table.current()
+        if state is None:
             return None
-        marker = target / self._TAIL_MARKER
-        if not marker.exists():
-            return None
-        return set(json.loads(marker.read_text()))
-
-    def _unfolded_tail_names(self) -> set[str]:
-        """Live tail files NOT reflected in the published state — nonempty
-        exactly when a previous writer crashed between its tail append
-        and its state publish (or the state predates the marker). Without
-        this check those events would be invisible to every state-served
-        read and then destroyed by the next tail checkpoint, silently
-        regressing a processed file to 'uploaded' (and, once the janitor
-        reaps it, to a terminal 'failed' for data that IS in the products
-        table)."""
-        if not self._state_exists():
-            return set()
+        marker = state / self._TAIL_MARKER
+        recorded = set(json.loads(marker.read_text())) if marker.exists() else set()
         live = {f.name for f in self._tail_files()}
-        recorded = self._recorded_tail_names()
-        if recorded is None:
-            return live  # unknown provenance: treat all as unfolded once
-        return live - recorded
+        return None if live - recorded else state
+
+    def _fold_input_bytes(self, state: Path | None) -> int:
+        """Parquet bytes the state fold reads (driver-side stat), for
+        output file sizing: the state it folds into or — seeding from the
+        log — the compacted history, plus the live tail."""
+        root = state if state is not None else self.hist_table.current()
+        files = [*(root.rglob("*.parquet") if root else ()), *self._tail_files()]
+        return sum(f.stat().st_size for f in files if f.is_file())
 
     def _checkpoint_events(self) -> None:
         """Bound the event log (called inside the write locks): once the
@@ -324,12 +285,11 @@ class LedgerStore:
         file count is bounded by TAIL_MAX_FILES + the history's few
         files regardless of warehouse age.
 
-        Publish discipline matches the state table: versioned dir +
-        atomic symlink replace + two-version retention, so a reader
-        mid-scan on the previous history survives. Tail files are listed
-        BEFORE the fold and deleted only after the publish; writers are
-        flock-serialized, so no concurrent append can land into the
-        deleted set."""
+        Published like the state table (``VersionedTable.publish``), so
+        a reader mid-scan on the previous history survives. Tail files
+        are listed BEFORE the fold and deleted only after the publish;
+        writers are flock-serialized, so no concurrent append can land
+        into the deleted set."""
         tail = self._tail_files()
         if len(tail) <= self.TAIL_MAX_FILES:
             return
@@ -338,42 +298,21 @@ class LedgerStore:
         # plain (one row per file, no shuffle/window) instead of
         # re-folding hist ∪ tail; the window fold is only the fallback
         # for a state-less warehouse.
-        if self._state_exists() and not self._unfolded_tail_names():
-            winners = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.state_path)
+        state = self._served_state()
+        if state is not None:
+            winners = self.spark.read.schema(LEDGER_SCHEMA).parquet(str(state))
         else:
             winners = self._latest_per_file(self.read_events())
-
-        # What readers could be pinned to, captured BEFORE the new dir
-        # exists: in the no-symlink crash window _hist_dir() falls back
-        # to the newest complete version, and capturing it after the
-        # write would resolve to the new dir itself — retention would
-        # then delete the version fallback readers are actually on.
-        prev_hist = self._hist_dir()
-        versions = self._versions(self.hist_path)
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = Path(f"{self.hist_path}.v{next_n}")
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
-        (
-            winners.coalesce(1)
+        self.hist_table.publish(
+            lambda new_dir: winners.coalesce(1)
             .sortWithinPartitions("file_id")
             .write.mode("overwrite")
             .parquet(str(new_dir))
         )
-
-        hist = Path(self.hist_path)
-        swap_symlink(hist, new_dir.name)  # readers see old xor new history
-
         for f in tail:
             f.unlink(missing_ok=True)
-        # Keep {new, previously-read}; a complete-but-unpublished crash
-        # remnant must not displace the just-retired live version from
-        # retention (see versioning.retire_versions).
-        retire_versions(self._versions(self.hist_path), keep=(new_dir, prev_hist))
 
-    def _compact(self, new_events: DataFrame, seed_from_log: bool = False) -> None:
+    def _compact(self, new_events: DataFrame, state: Path | None) -> None:
         """state' = latest-per-file_id over (previous state ∪ new events).
 
         The previous state already holds exactly one winner row per file,
@@ -384,91 +323,53 @@ class LedgerStore:
         lost and the next append self-heals the cache. ``new_events`` was
         already appended to the log before this is called, so the
         log-seeded fold double-counts them harmlessly (the winner rule is
-        idempotent). Publication is an atomic symlink replace; see the
-        module docstring.
+        idempotent). ``state`` is ``_served_state()`` as resolved before
+        ``new_events`` reached the tail; None seeds from the log.
+        Publication is ``VersionedTable.publish``; see the module
+        docstring.
         """
-        if self._state_exists() and not seed_from_log:
-            base = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.state_path)
+        if state is not None:
+            base = self.spark.read.schema(LEDGER_SCHEMA).parquet(str(state))
         elif self.exists():
             # Legacy warehouse, crash before a symlink publish, or a
-            # detected unfolded tail (seed_from_log): replay the full
-            # hist ∪ tail view so no event is left behind.
+            # detected unfolded tail: replay the full hist ∪ tail view so
+            # no event is left behind.
             base = self._latest_per_file(self.read_events())
         else:
             base = self.spark.createDataFrame([], LEDGER_SCHEMA)
         merged = self._latest_per_file(base.unionByName(new_events))
 
-        versions = self._versions()
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = Path(f"{self.state_path}.v{next_n}")
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
-        # File count from the PREVIOUS state's bytes + the live tail
-        # (driver-side stat): one winner row per file_id keeps this table
+        # File count from the bytes the fold reads (``_fold_input_bytes``,
+        # driver-side stat): one winner row per file_id keeps this table
         # tiny for most warehouse lifetimes, and a single-file write skips
         # repartitionByRange's separate range-sampling job — one Spark job
         # per append instead of two (guide §6 output sizing; the old
         # ``defaultParallelism // 8`` was a core-count constant that wrote
         # kilobyte files). The range+sort layout (disjoint file_id ranges
         # per file) is unchanged either way.
-        target = self._state_target()
-        prev_bytes = (
-            sum(f.stat().st_size for f in target.rglob("*.parquet") if f.is_file())
-            if target is not None
-            else 0
-        )
-        tail_bytes = sum(f.stat().st_size for f in self._tail_files())
-        nparts = max(1, -(-(prev_bytes + tail_bytes) // (64 << 20)))
+        nparts = max(1, -(-self._fold_input_bytes(state) // (64 << 20)))
         shaped = (
             merged.coalesce(1)
             if nparts == 1
             else merged.repartitionByRange(nparts, "file_id")
         )
-        (
-            shaped.sortWithinPartitions("file_id")
-            .write.mode("overwrite")
-            .parquet(str(new_dir))
-        )
-        # Record which tail files this state reflects (everything live:
-        # either the previous state covered them all — seed_from_log was
-        # False — or we just replayed the full log). Written into the
-        # version dir BEFORE the symlink publish, so the marker is
-        # atomic with the state it describes.
-        import json as _json
 
-        (new_dir / self._TAIL_MARKER).write_text(
-            _json.dumps(sorted(f.name for f in self._tail_files()))
-        )
+        def write(new_dir: Path) -> None:
+            (
+                shaped.sortWithinPartitions("file_id")
+                .write.mode("overwrite")
+                .parquet(str(new_dir))
+            )
+            # Record which tail files this state reflects (everything
+            # live: either the previous state covered them all, or we
+            # just replayed the full log). Written into the version dir
+            # BEFORE the symlink publish, so the marker is atomic with
+            # the state it describes.
+            (new_dir / self._TAIL_MARKER).write_text(
+                json.dumps(sorted(f.name for f in self._tail_files()))
+            )
 
-        state = Path(self.state_path)
-        prev_state = None  # what readers could be pinned to pre-publish
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            if target.exists():
-                prev_state = target
-        elif state.exists():
-            # Pre-symlink warehouse: retire the real directory. The brief
-            # gap before the publish below is covered by the event-log
-            # fallback in current()/_compact().
-            legacy = Path(self.state_path + ".legacy")
-            if legacy.exists():
-                shutil.rmtree(legacy)
-            state.rename(legacy)
-        swap_symlink(state, new_dir.name)  # readers see old xor new version
-
-        # Retain exactly {new, previously-published}: a reader that
-        # resolved the symlink just before the repoint may still be
-        # scanning the old directory, and a complete-but-unpublished
-        # crash remnant must not displace it from retention (see
-        # versioning.retire_versions; ledger state has no version-dir
-        # fallback reader — a symlink-less warehouse replays the event
-        # log — so the symlink target is the only pinnable dir).
-        retire_versions(self._versions(), keep=(new_dir, prev_state))
-        legacy = Path(self.state_path + ".legacy")
-        if legacy.exists():
-            shutil.rmtree(legacy, ignore_errors=True)
+        self.state_table.publish(write)
 
     def current(self) -> DataFrame:
         """Latest event per file_id — the queryable ledger state
@@ -478,8 +379,9 @@ class LedgerStore:
         file, no window replay); falls back to replaying the event log
         for warehouses written before compaction existed.
         """
-        if self._state_exists() and not self._unfolded_tail_names():
-            return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.state_path)
+        state = self._served_state()
+        if state is not None:
+            return self.spark.read.schema(LEDGER_SCHEMA).parquet(str(state))
         # No state, OR the tail holds events a crashed writer never
         # folded (cheap listdir + marker check): serve the replay view —
         # correct in the crash window; the next append heals the state.

@@ -1,10 +1,18 @@
-"""Shared retention for symlink-published versioned tables.
+"""The publish protocol for symlink-published versioned tables.
 
-Every version-published table here (products, ledger state, ledger
-history, online compaction) follows the same publish protocol: write
-``<prefix>.v{N}`` whole, atomically repoint the symlink, then delete old
-versions. Retention's contract is *a reader that resolved the symlink (or
-the no-symlink fallback) just before this publish must keep scanning its
+A versioned table is a symlink ``<name>`` pointing at a sibling
+``<name>.v{N}`` directory. :class:`VersionedTable` is the ONE
+implementation of how such a table is resolved and published: the
+products table (pipeline.py), the ledger state and the ledger history
+(sources/ledger.py) all go through it and carry no copy of their own.
+Publishing writes ``<name>.v{N}`` whole, atomically repoints the symlink,
+then deletes old versions. (The stream sinks and
+``maintenance.compact_published_table`` still run a tmp-dir + rename
+variant of the same steps, built from the two primitives at the bottom
+of this module.)
+
+Retention's contract is *a reader that resolved the symlink (or the
+no-symlink fallback) just before this publish must keep scanning its
 pinned version safely*, so exactly two directories must survive a
 publish: the NEW version and the directory readers could have been
 pinned to immediately before it (the previously-published target — or,
@@ -27,9 +35,83 @@ outright.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from pathlib import Path
-from typing import Iterable
+from typing import Callable, Iterable
+
+
+class VersionedTable:
+    """Handle on the versioned table published through the symlink
+    ``link``: lists its versions, resolves the version readers see, and
+    publishes a new one. Callers serialize writers on the table's own
+    lock; the handle holds no state beyond the path."""
+
+    def __init__(self, link: str | Path):
+        self.link = Path(link)
+        self._pat = re.compile(re.escape(self.link.name) + r"\.v(\d+)$")
+
+    def versions(self) -> list[Path]:
+        """Version dirs ``<name>.v{N}``, sorted by N."""
+        parent = self.link.parent
+        if not parent.exists():
+            return []
+        found = [
+            (int(m.group(1)), p)
+            for p in parent.iterdir()
+            if (m := self._pat.match(p.name))
+        ]
+        return [p for _, p in sorted(found)]
+
+    def current(self) -> Path | None:
+        """The directory a reader scans — resolve it ONCE and read that
+        path, so the scan stays pinned: the symlink target, a legacy real
+        directory (pre-versioning layout), or, when there is no symlink
+        (a crash between a version write and its first publish), the
+        newest COMPLETE version. Completeness = ``_SUCCESS``: a
+        half-written crash remnant is indistinguishable from a
+        written-but-unpublished version by name alone, and trusting it
+        would propagate a torn table into the next write — better absent
+        (every table published here can be rebuilt from its inputs). The
+        version listing runs only when the symlink does not resolve."""
+        p = self.link
+        if p.is_symlink():
+            target = p.parent / os.readlink(p)
+            if target.exists():
+                return target
+        elif p.exists() and any(p.iterdir()):
+            return p
+        complete = [v for v in self.versions() if (v / "_SUCCESS").exists()]
+        return complete[-1] if complete else None
+
+    def publish(self, write: Callable[[Path], None]) -> Path:
+        """Publish a new version: ``write(new_dir)`` fills the next
+        ``<name>.v{N}``, the symlink swaps to it, and retention keeps
+        {new, previously read}. Returns the new version dir.
+
+        The previously-read version is captured BEFORE the new dir
+        exists: in the no-symlink window ``current()`` falls back to the
+        newest complete version, and capturing it after the write would
+        resolve to the new dir itself — retention would then delete the
+        version fallback readers are actually on. A legacy real
+        directory at ``link`` is moved aside to ``<name>.legacy`` for the
+        swap and deleted after it (the gap is covered by the
+        newest-version fallback)."""
+        prev = self.current()
+        versions = self.versions()
+        n = int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
+        new_dir = self.link.parent / f"{self.link.name}.v{n}"
+        write(new_dir)
+        legacy = self.link.parent / f"{self.link.name}.legacy"
+        if self.link.exists() and not self.link.is_symlink():
+            if legacy.exists():
+                shutil.rmtree(legacy)
+            self.link.rename(legacy)
+        swap_symlink(self.link, new_dir.name)  # readers see old xor new
+        retire_versions(self.versions(), keep=(new_dir, prev))
+        if legacy.exists():
+            shutil.rmtree(legacy, ignore_errors=True)
+        return new_dir
 
 
 def swap_symlink(state: Path, target_name: str) -> None:

@@ -462,7 +462,7 @@ def test_vacuum_bundles_maintenance(spark, tmp_path):
 
         upload(src, landing)
         wh.ingest(landing)
-    base = wh._resolve_products_dir()
+    base = wh.products_table.current()
     assert wh._delta_dirs(base), "expected an outstanding delta"
     before = sorted(
         (r["code"], r["product_name"]) for r in wh.products().collect()
@@ -505,7 +505,7 @@ def test_vacuum_bundles_maintenance(spark, tmp_path):
     assert report["reaped"] == ["900_tok_dead.json"]
     assert report["compaction"] is not None
     # deltas folded into the new base; content identical
-    new_base = wh._resolve_products_dir()
+    new_base = wh.products_table.current()
     assert not wh._delta_dirs(new_base)
     after = sorted(
         (r["code"], r["product_name"]) for r in wh.products().collect()
@@ -554,7 +554,7 @@ def test_ledger_heals_unfolded_tail_events(spark, tmp_path):
 
     # The next append heals the state with the orphan folded in.
     led.append([ev("f2.json", "uploaded", dt.datetime(2025, 1, 1, 12, 10))])
-    assert not led._unfolded_tail_names()
+    assert led._served_state() is not None  # no unfolded tail event
     assert led.status_of("f1.json")["status"] == "processed"
 
     # A tail checkpoint cannot destroy it.

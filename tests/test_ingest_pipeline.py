@@ -438,7 +438,7 @@ def test_ledger_point_status_fast_path(spark, warehouse, landing, tmp_path):
     wh.ingest(landing)
 
     # (a) compacted state exists and holds exactly one row per file
-    assert wh.ledger._state_exists()
+    assert wh.ledger.state_table.current() is not None
     state = spark.read.parquet(wh.ledger.state_path)
     assert state.count() == 2
     assert state.select("file_id").distinct().count() == 2
@@ -487,7 +487,7 @@ def test_ledger_compact_seeds_from_log_when_state_missing(
     wh = ProductWarehouse(spark, warehouse)
     wh.ingest(landing)
     ledger = wh.ledger
-    assert ledger._state_exists()
+    assert ledger.state_table.current() is not None
 
     # Simulate the legacy/crash layout: events exist, state cache gone.
     state = Path(ledger.state_path)
@@ -497,7 +497,7 @@ def test_ledger_compact_seeds_from_log_when_state_missing(
         shutil.rmtree(target, ignore_errors=True)
     else:
         shutil.rmtree(state)
-    assert not ledger._state_exists()
+    assert ledger.state_table.current() is None
 
     # current() must still answer from the log.
     assert ledger.status_of(lf.file_id)["status"] == STATUS_PROCESSED
@@ -520,7 +520,7 @@ def test_ledger_compact_seeds_from_log_when_state_missing(
             }
         ]
     )
-    assert other._state_exists()
+    assert other.state_table.current() is not None
     cached = {
         r["file_id"]: r["status"]
         for r in spark.read.parquet(other.state_path).collect()
@@ -542,7 +542,7 @@ def test_ledger_state_swap_is_symlink_publish(spark, warehouse, landing, tmp_pat
     state = Path(wh.ledger.state_path)
     assert state.is_symlink()
     # exactly one live version dir, pointed to by the symlink
-    versions = wh.ledger._versions()
+    versions = wh.ledger.state_table.versions()
     assert len(versions) == 1
     assert (state.parent / os.readlink(state)) == versions[0]
 
@@ -661,7 +661,7 @@ def test_products_reader_survives_concurrent_republish(spark, tmp_path, landing)
     assert {r["code"] for r in wh.products().collect()} == {"0001", "0002"}
     # the published path is a symlink now; retention keeps <= 2 versions
     assert (tmp_path / "wh" / "products").is_symlink()
-    assert len(wh._product_versions()) <= 2
+    assert len(wh.products_table.versions()) <= 2
 
 
 def test_products_legacy_dir_migrates_to_versioned(spark, tmp_path, landing):
@@ -685,7 +685,7 @@ def test_products_legacy_dir_migrates_to_versioned(spark, tmp_path, landing):
     target = p.parent / os.readlink(p)
     p.unlink()
     shutil.copytree(target, p)
-    for v in wh._product_versions():
+    for v in wh.products_table.versions():
         shutil.rmtree(v)
     assert p.is_dir() and not p.is_symlink()
     assert {r["code"] for r in wh.products().collect()} == {"0001"}
@@ -762,7 +762,7 @@ def test_compact_products_online_reader_survives(spark, tmp_path, landing):
     # fresh resolution reads the compacted version, same rows
     assert {r["code"] for r in wh.products().collect()} == before
     assert (tmp_path / "wh" / "products").is_symlink()
-    assert len(wh._product_versions()) <= 2
+    assert len(wh.products_table.versions()) <= 2
 
     # a merge after compaction continues the chain without losing rows
     upload(json.dumps([{"code": "zzzz", "product_name": "C"}]).encode(),
@@ -828,7 +828,7 @@ def test_products_fallback_ignores_torn_version(spark, tmp_path, landing):
     # a half-written next version: files but no _SUCCESS
     torn = whdir / "products.v99"
     torn.mkdir()
-    published = [v for v in wh._product_versions() if v.name != "products.v99"]
+    published = [v for v in wh.products_table.versions() if v.name != "products.v99"]
     src = next(p for p in published[-1].iterdir() if p.suffix == ".parquet")
     (torn / src.name).write_bytes(src.read_bytes()[: len(src.read_bytes()) // 2])
 
@@ -836,12 +836,12 @@ def test_products_fallback_ignores_torn_version(spark, tmp_path, landing):
     assert {r["code"] for r in wh.products().collect()} == {"0001"}
 
     # with no complete version, the table is absent (empty), not torn
-    for v in wh._product_versions():
+    for v in wh.products_table.versions():
         s = v / "_SUCCESS"
         if s.exists():
             os.remove(s)
     assert wh.products().count() == 0
-    assert not wh._has_products()
+    assert wh.products_table.current() is None
 
 
 def test_ledger_hist_retention_in_no_symlink_window(spark, tmp_path):
@@ -869,7 +869,7 @@ def test_ledger_hist_retention_in_no_symlink_window(spark, tmp_path):
 
     for i in range(3):
         ledger.append([ev(i)])  # exceeds TAIL_MAX_FILES -> checkpoints
-    hist_versions = ledger._versions(ledger.hist_path)
+    hist_versions = ledger.hist_table.versions()
     assert hist_versions, "expected a checkpointed history version"
     v_prev = hist_versions[-1]
 
@@ -880,7 +880,7 @@ def test_ledger_hist_retention_in_no_symlink_window(spark, tmp_path):
     # exactly ONE more checkpoint (tail refills past the threshold):
     # retention must keep {new, v_prev}, not resolve prev to the
     # just-written version and delete v_prev
-    while ledger._versions(ledger.hist_path)[-1] == v_prev:
+    while ledger.hist_table.versions()[-1] == v_prev:
         ledger.append([ev(10 + len(ledger._tail_files()))])
 
     assert v_prev.exists(), "fallback readers' hist version was deleted"
@@ -904,7 +904,7 @@ def test_retention_keeps_pinned_version_over_crash_remnant(spark, tmp_path, land
 
     whdir = tmp_path / "wh"
     wh = ProductWarehouse(spark, whdir)
-    wh.delta_fold_threshold = None  # exercise the publish path per merge
+    wh.delta_fold_threshold = 1  # fold on every ingest: a publish per merge
     upload(json.dumps([{"code": "0001", "product_name": "A"}]).encode(),
            landing, orig_name="a.json")
     wh.ingest(landing)
@@ -931,18 +931,21 @@ def test_retention_keeps_pinned_version_over_crash_remnant(spark, tmp_path, land
 
 def test_products_delta_view_equals_always_fold(spark, tmp_path, landing):
     """Merge-on-read equivalence: a warehouse accumulating delta dirs must
-    serve EXACTLY the table a warehouse folding every merge serves — same
-    landed files, same order, overlapping codes, $set field-survival
-    semantics (absent attr keys survive, explicit nulls overwrite),
-    last-wins within and across files."""
+    serve EXACTLY the table that folding every batch into the table with
+    ``merge_products`` yields — same landed files, same order, overlapping
+    codes, $set field-survival semantics (absent attr keys survive,
+    explicit nulls overwrite), last-wins within and across files. The
+    oracle never touches the delta/compose code."""
     import json
 
+    from data_pipeline_challenge_spark.operators.merge import merge_products
     from data_pipeline_challenge_spark.pipeline import ProductWarehouse
+    from data_pipeline_challenge_spark.sources.json_ingest import parse_bytes
     from data_pipeline_challenge_spark.sources.landing import upload
 
     wh_delta = ProductWarehouse(spark, tmp_path / "wh_delta")  # deltas on
-    wh_fold = ProductWarehouse(spark, tmp_path / "wh_fold")
-    wh_fold.delta_fold_threshold = None  # fold every merge (pre-delta path)
+    oracle = None  # sequential full merges over the same batches
+    ts = dt.datetime(2024, 1, 1)
 
     rounds = [
         [{"code": "A", "product_name": "a1", "k1": "v1", "k2": "v2"},
@@ -954,24 +957,37 @@ def test_products_delta_view_equals_always_fold(spark, tmp_path, landing):
          {"code": "A", "product_name": "a4", "k1": "v1z"}],  # intra-file dup
     ]
     for i, recs in enumerate(rounds):
-        upload(json.dumps(recs).encode(), landing, orig_name=f"r{i}.json")
+        payload = json.dumps(recs).encode()
+        lf = upload(payload, landing, orig_name=f"r{i}.json")
         wh_delta.ingest(landing, delete_processed=False)
-        wh_fold.ingest(landing)  # deletes processed; next round starts clean
+        batch = spark.createDataFrame(
+            [
+                (code, name, fid, ts, attrs, seq)
+                for fid, seq, code, name, attrs, valid, _ in parse_bytes(
+                    lf.file_id, payload
+                )
+                if valid
+            ],
+            "code string, product_name string, file_id string, "
+            "last_modified_at_company timestamp, attrs map<string,string>, "
+            "seq long",
+        )
+        oracle = merge_products(oracle, batch)
 
-    def norm(wh):
+    def norm(df):
         return {
             r["code"]: (
                 r["product_name"],
                 r["file_id"],
                 tuple(sorted(r["attrs"].items())),
             )
-            for r in wh.products().collect()
+            for r in df.collect()
         }
 
     # the delta warehouse really is on the delta path
-    base = wh_delta._resolve_products_dir()
+    base = wh_delta.products_table.current()
     assert len(wh_delta._delta_dirs(base)) == 2  # rounds 2 and 3
-    assert norm(wh_delta) == norm(wh_fold)
+    assert norm(wh_delta.products()) == norm(oracle)
 
 
 def test_products_delta_fold_and_retention(spark, tmp_path, landing):
@@ -1041,7 +1057,7 @@ def test_products_delta_view_never_shuffles_base(spark, tmp_path, landing):
             orig_name=f"f{i}.json",
         )
         wh.ingest(landing)
-    base = wh._resolve_products_dir()
+    base = wh.products_table.current()
     assert wh._delta_dirs(base)  # composed path active
 
     plan = spark._jvm.PythonSQLUtils.explainString(
@@ -1056,8 +1072,8 @@ def test_products_delta_commit_marker_and_orphan_sweep(spark, tmp_path, landing)
     committer artifact sessions can disable — losing it must not make
     ingested data invisible); an all-invalid batch must not append an
     empty delta or advance the fold counter; and retired bases' delta
-    dirs (and crashed tmps) are swept even when the base is retired by
-    the delta-blind compact_published_table branch."""
+    dirs (and crashed tmps) are swept when a compaction with no deltas
+    outstanding retires their base."""
     import json
     import os
 
@@ -1083,7 +1099,7 @@ def test_products_delta_commit_marker_and_orphan_sweep(spark, tmp_path, landing)
     # an all-invalid batch appends nothing and folds nothing
     upload(b"this is not json", landing, orig_name="bad.json")
     wh.ingest(landing)
-    base = wh._resolve_products_dir()
+    base = wh.products_table.current()
     assert len(wh._delta_dirs(base)) == 1
     assert base.name == "products.v1"
 
@@ -1092,8 +1108,8 @@ def test_products_delta_commit_marker_and_orphan_sweep(spark, tmp_path, landing)
     assert (whdir / "products.v1.d1").exists()
     # plant a crashed tmp of the retired-soon base
     (whdir / "products.v1.d9.tmp").mkdir()
-    # compact again (no deltas) -> v3 via compact_published_table;
-    # v1 retires and its delta dirs/tmps must not leak
+    # compact again (no deltas) -> v3; v1 retires and its delta
+    # dirs/tmps must not leak
     wh.compact_products(target_file_bytes=1 << 30)
     assert not (whdir / "products.v1").exists()
     assert not (whdir / "products.v1.d1").exists()
@@ -1124,7 +1140,7 @@ def test_ledger_event_log_stays_bounded(spark, tmp_path):
     # next append checkpoints it; history is a handful of compacted files
     assert len(store._tail_files()) <= store.TAIL_MAX_FILES + 1
     assert (tmp_path / "ledger_hist").is_symlink()
-    assert len(store._versions(store.hist_path)) <= 2
+    assert len(store.hist_table.versions()) <= 2
 
     # nothing lost: every file readable, the pre-checkpoint transition won
     replay = {
@@ -1143,7 +1159,7 @@ def test_ledger_event_log_stays_bounded(spark, tmp_path):
     state = tmp_path / "ledger_state"
     if state.is_symlink():
         state.unlink()
-    for v in store._versions():
+    for v in store.state_table.versions():
         shutil.rmtree(v, ignore_errors=True)
     recovered = {r["file_id"]: r["status"] for r in store.current().collect()}
     assert recovered == replay
@@ -1182,7 +1198,7 @@ def test_products_retention_skips_torn_versions(spark, tmp_path, landing):
     from data_pipeline_challenge_spark.sources.landing import upload
 
     wh = ProductWarehouse(spark, tmp_path / "wh")
-    wh.delta_fold_threshold = None  # exercise the publish path per merge
+    wh.delta_fold_threshold = 1  # fold on every ingest: a publish per merge
     upload(json.dumps([{"code": "0001", "product_name": "A"}]).encode(),
            landing, orig_name="a.json")
     wh.ingest(landing)
@@ -1201,4 +1217,92 @@ def test_products_retention_skips_torn_versions(spark, tmp_path, landing):
     # the pinned pre-merge version survived retention (keep-2 of complete)
     assert {r["code"] for r in pinned.collect()} == {"0001"}
     assert {r["code"] for r in wh.products().collect()} == {"0001", "0002"}
-    assert len(wh._product_versions()) <= 2
+    assert len(wh.products_table.versions()) <= 2
+
+
+def test_delta_fold_threshold_must_be_positive(spark, tmp_path, landing):
+    """There is no always-rewrite mode: a threshold of None or 0 is
+    rejected before anything is read or written."""
+    wh = ProductWarehouse(spark, tmp_path / "wh")
+    upload(json.dumps([{"code": "0001", "product_name": "A"}]).encode(),
+           landing, orig_name="a.json")
+    for bad in (None, 0):
+        wh.delta_fold_threshold = bad
+        with pytest.raises(ValueError, match="delta_fold_threshold"):
+            wh.ingest(landing)
+    assert not (tmp_path / "wh" / "products").exists()
+
+
+def test_products_table_bytes_counts_unpublished_version(spark, tmp_path, landing):
+    """The write-size estimate sizes the version readers see: in the
+    no-symlink crash window that is the newest complete version, which
+    products() serves and the next merge folds — not an empty table."""
+    wh = ProductWarehouse(spark, tmp_path / "wh")
+    upload(json.dumps([{"code": "0001", "product_name": "A"}]).encode(),
+           landing, orig_name="a.json")
+    wh.ingest(landing)
+    link = tmp_path / "wh" / "products"
+    version = link.resolve()
+    link.unlink()  # crash window: version written, symlink gone
+    want = sum(f.stat().st_size for f in version.rglob("*.parquet"))
+    assert want > 0
+    assert wh._table_bytes() == want
+
+
+def test_ledger_fold_estimate_counts_hist_when_seeding_from_log(spark, tmp_path):
+    """With no resolvable state the ledger fold replays hist ∪ tail, so its
+    output-size estimate must count the compacted history's parquet bytes
+    as well as the tail's."""
+    from data_pipeline_challenge_spark.sources.ledger import LedgerStore
+
+    store = LedgerStore(spark, tmp_path)
+    store.TAIL_MAX_FILES = 2
+    for i in range(4):
+        store.append([_ledger_row(f"f{i}", "uploaded")])
+    store.append([_ledger_row("f9", "uploaded")])  # leaves a live tail
+    hist = (tmp_path / "ledger_hist").resolve()
+    assert hist.is_dir() and store._tail_files()
+
+    import shutil
+
+    # no resolvable state: the fold seeds from the log
+    (tmp_path / "ledger_state").unlink()
+    for v in tmp_path.glob("ledger_state.v*"):
+        shutil.rmtree(v)
+
+    hist_bytes = sum(f.stat().st_size for f in hist.rglob("*.parquet"))
+    tail_bytes = sum(f.stat().st_size for f in store._tail_files())
+    assert hist_bytes > 0
+    assert store._fold_input_bytes(None) == hist_bytes + tail_bytes
+
+
+def test_ledger_older_state_version_replays_missing_events(spark, tmp_path):
+    """If the ledger_state symlink and its newest version are lost while an
+    older retained state version survives, the fallback resolves that
+    older version — but its tail marker lacks the newer tail files, so
+    reads replay the log and still see the latest status, and the next
+    append republishes a state holding it."""
+    import shutil
+
+    from data_pipeline_challenge_spark.sources.ledger import LedgerStore
+
+    store = LedgerStore(spark, tmp_path)
+    store.append([_ledger_row("f1", "uploaded")])
+    store.append([_ledger_row("f1", "processed", n=3)])
+    older, newest = store.state_table.versions()
+    (tmp_path / "ledger_state").unlink()
+    shutil.rmtree(newest)
+    assert store.state_table.current() == older  # stale fallback
+    assert store._served_state() is None  # its marker misses a tail file
+
+    assert store.status_of("f1")["status"] == "processed"
+
+    store.append([_ledger_row("f2", "uploaded")])
+    assert (tmp_path / "ledger_state").is_symlink()
+    state = store._served_state()
+    assert state is not None and state != older
+    served = {
+        r["file_id"]: r["status"]
+        for r in spark.read.parquet(str(state)).collect()
+    }
+    assert served == {"f1": "processed", "f2": "uploaded"}

@@ -220,7 +220,7 @@ def test_ledger_compaction_equals_full_log_replay(spark_prop, run):
                     state.unlink()
                 elif state.exists():
                     shutil.rmtree(state)
-                for v in store._versions():
+                for v in store.state_table.versions():
                     shutil.rmtree(v, ignore_errors=True)
 
         def key(df):

@@ -3048,3 +3048,14 @@ def test_prefix_bucket_local_matches_distributed(spark):
         ]
         local = prefix_bucket_local(spark, values, n)
         assert local == dist
+
+
+def test_prefix_bucket_local_rejects_non_str(spark):
+    """A non-string value would hash to a different bucket than the
+    store's string column holds: it must fail loudly, not return a wrong
+    bucket."""
+    from data_pipeline_challenge_spark.batchstore import prefix_bucket_local
+
+    for values in (["a", 7], [7], [b"a"], [None]):
+        with pytest.raises(TypeError, match="str"):
+            prefix_bucket_local(spark, values, 8)
